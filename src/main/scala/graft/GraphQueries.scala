@@ -248,20 +248,10 @@ object GraphQueries {
     // raw localCheckpoint keeps the origin's exact BigInt size stats, and
     // a J-join plan checkpointed every round compounds a J-fold stats
     // product — harmless at 3 rounds, a driver-wedge trap beyond ~10
-    var labels = GraphAnalytics.checkpointScrubbed(
-      sym.select(col("a").as("vid")).distinct()
-        .select(col("vid"), col("vid").as("lbl")))
-    for (_ <- 1 to rounds) {
-      val counts = sym.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
-        .groupBy(col("b").as("vid"), col("lbl"))
-        .agg(count(lit(1)).as("__c"))
-      val winner = counts
-        .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
-        .groupBy("vid").agg(min("__s").as("__s"))
-        .select(col("vid"), col("__s.l").as("__w"))
-      labels = GraphAnalytics.checkpointScrubbed(labels
-        .join(winner, Seq("vid"), "left")
-        .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl")))
+    val labels = (1 to rounds).foldLeft(GraphAnalytics.checkpointScrubbed(
+        sym.select(col("a").as("vid")).distinct()
+          .select(col("vid"), col("vid").as("lbl")))) {
+      (lab, _) => GraphAnalytics.checkpointScrubbed(GraphAnalytics.lpaRound(sym, lab))
     }
     labels.select(col("vid"), col("lbl").as("label"))
   }

@@ -283,6 +283,23 @@ object GraphAnalytics {
     dir.unionByName(dir.select(col("b").as("a"), col("a").as("b"))).distinct()
   }
 
+  /** One synchronous LPA round over symmetrized edges (a, b) and labels
+    * (vid, lbl): every vertex adopts its most frequent neighbor label
+    * (count desc, label asc), keeping its own when it has no neighbor.
+    * Returned before any checkpoint; each caller picks its own form. */
+  private[graft] def lpaRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val counts = edges.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
+      .groupBy(col("b").as("vid"), col("lbl"))
+      .agg(count(lit(1)).as("__c"))
+    val winner = counts
+      .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
+      .groupBy("vid").agg(min("__s").as("__s"))
+      .select(col("vid"), col("__s.l").as("__w"))
+    labels
+      .join(winner, Seq("vid"), "left")
+      .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl"))
+  }
+
   def labelPropagationDF(g: GraphStore, toLong: Column => Column,
                          rounds: Int = 3,
                          symEdges: Option[DataFrame] = None): DataFrame = {
@@ -295,19 +312,9 @@ object GraphAnalytics {
     val edges = symEdges.getOrElse(
       symmetrizedEdges(g, toLong).persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      var labels = verts.select(col("vid"), col("vid").as("lbl")).localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val counts = edges.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
-          .groupBy(col("b").as("vid"), col("lbl"))
-          .agg(count(lit(1)).as("__c"))
-        val winner = counts
-          .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
-          .groupBy("vid").agg(min("__s").as("__s"))
-          .select(col("vid"), col("__s.l").as("__w"))
-        labels = labels
-          .join(winner, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl"))
-          .localCheckpoint(true)
+      val labels = (1 to rounds).foldLeft(
+          verts.select(col("vid"), col("vid").as("lbl")).localCheckpoint(true)) {
+        (lab, _) => lpaRound(edges, lab).localCheckpoint(true)
       }
       labels.join(verts, Seq("vid")).select(col("id"), col("lbl").as("label"))
     } finally {
@@ -345,30 +352,25 @@ object GraphAnalytics {
     try {
       // landmark ids that are not graph vertices seed nothing (GraphX
       // parity: only vertices can carry the initial 0)
-      var dist = verts
+      val seed = verts
         .where(col("vid").isin(landmarks: _*))
         .select(col("vid"), col("vid").as("landmark"), lit(0L).as("dist"))
         .localCheckpoint(true)
-      var prevCount = -1L
-      var prevSum = -1L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
-        val msgs = edges
-          .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
-          .select(col("src").as("vid"), col("landmark"), (col("dist") + 1L).as("dist"))
-        val next = dist.unionByName(msgs)
-          .groupBy("vid", "landmark").agg(min("dist").as("dist"))
-          .localCheckpoint(false) // lazy: the probe agg materializes it
-        val probe = next
-          .agg(count(lit(1)).as("c"), coalesce(sum("dist"), lit(0L)).as("s")).first()
-        val (c, s) = (probe.getLong(0), probe.getLong(1))
-        converged = c == prevCount && s == prevSum
-        prevCount = c; prevSum = s
-        dist = next
+      // state: (dist, previous round's row count, previous Σdist)
+      val (dist, _, _) = Fixpoint.run((seed, -1L, -1L), maxIters,
+          s"shortest paths did not converge in $maxIters rounds") {
+        case (dist, prevCount, prevSum) =>
+          val msgs = edges
+            .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
+            .select(col("src").as("vid"), col("landmark"), (col("dist") + 1L).as("dist"))
+          val next = dist.unionByName(msgs)
+            .groupBy("vid", "landmark").agg(min("dist").as("dist"))
+            .localCheckpoint(false) // lazy: the probe agg materializes it
+          val probe = next
+            .agg(count(lit(1)).as("c"), coalesce(sum("dist"), lit(0L)).as("s")).first()
+          val (c, s) = (probe.getLong(0), probe.getLong(1))
+          ((next, c, s), c == prevCount && s == prevSum)
       }
-      require(converged, s"shortest paths did not converge in $maxIters rounds")
       dist.join(verts, Seq("vid")).select(col("id"), col("landmark"), col("dist"))
     } finally { verts.unpersist(); edges.unpersist() }
   }
@@ -1033,6 +1035,13 @@ object GraphAnalytics {
     } finally { verts.unpersist(); edges.unpersist() }
   }
 
+  /** The undirected simple edge set of `df`'s (u, v) endpoints: self-loops
+    * dropped, each edge once as (a = least, b = greatest), distinct. */
+  private def canonicalEdges(df: DataFrame, u: Column, v: Column): DataFrame =
+    df.select(u.as("u"), v.as("v")).where(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct()
+
   /** Adamic–Adar link prediction over an undirected pair graph (a, b):
     * for every NON-adjacent pair (u, v) with at least one common neighbor,
     * score Σ_{z ∈ N(u)∩N(v)} 1/ln(deg z) — common neighbors count, rare
@@ -1055,10 +1064,7 @@ object GraphAnalytics {
                  eager: Boolean = true): DataFrame = {
     require(topK > 0, s"need topK > 0; got $topK")
     require(maxDegree >= 2, s"need maxDegree >= 2; got $maxDegree")
-    val e0 = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
+    val canon = canonicalEdges(pairs, col("a").cast("long"), col("b").cast("long"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
@@ -1094,32 +1100,25 @@ object GraphAnalytics {
 
   def kCore(pairs: DataFrame, k: Int, maxIters: Int = 100): DataFrame = {
     require(k >= 1, s"need k >= 1; got $k")
-    val e0 = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
+    val canon = canonicalEdges(pairs, col("a").cast("long"), col("b").cast("long"))
     val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var live = sym.select(col("a").as("vid")).distinct().localCheckpoint(true)
-      var prevCount = -1L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
-        val liveEdges = sym
-          .join(live.select(col("vid").as("a")), Seq("a"), "left_semi")
-          .join(live.select(col("vid").as("b")), Seq("b"), "left_semi")
-        val next = liveEdges.groupBy(col("a").as("vid"))
-          .agg(count(lit(1)).as("__deg"))
-          .where(col("__deg") >= k)
-          .localCheckpoint(false) // lazy: the probe count materializes it
-        val c = next.count()
-        converged = c == prevCount
-        prevCount = c
-        live = next
+      val seed = sym.select(col("a").as("vid")).distinct().localCheckpoint(true)
+      // state: (live vertices, previous round's live count)
+      val (live, _) = Fixpoint.run((seed, -1L), maxIters,
+          s"k-core peeling did not converge in $maxIters rounds") {
+        case (live, prevCount) =>
+          val liveEdges = sym
+            .join(live.select(col("vid").as("a")), Seq("a"), "left_semi")
+            .join(live.select(col("vid").as("b")), Seq("b"), "left_semi")
+          val next = liveEdges.groupBy(col("a").as("vid"))
+            .agg(count(lit(1)).as("__deg"))
+            .where(col("__deg") >= k)
+            .localCheckpoint(false) // lazy: the probe count materializes it
+          val c = next.count()
+          ((next, c), c == prevCount)
       }
-      require(converged, s"k-core peeling did not converge in $maxIters rounds")
       live.select(col("vid"), col("__deg").as("degree"))
     } finally sym.unpersist()
   }
@@ -1166,32 +1165,26 @@ object GraphAnalytics {
     try {
       val spark = edges.sparkSession
       import spark.implicits._
-      var dist = landmarks.toDF("vid")
+      val seed = landmarks.toDF("vid")
         .select(col("vid"), col("vid").as("landmark"),
           lit(BigDecimal(0)).cast("decimal(28,6)").as("dist"))
         .localCheckpoint(true)
-      var prevCount = -1L
-      var prevSum: java.math.BigDecimal = null
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
-        val msgs = e
-          .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
-          .select(col("src").as("vid"), col("landmark"),
-            (col("dist") + col("weight")).cast("decimal(28,6)").as("dist"))
-        val next = dist.unionByName(msgs)
-          .groupBy("vid", "landmark").agg(min("dist").as("dist"))
-          .localCheckpoint(false) // lazy: the probe agg materializes it
-        val probe = next.agg(count(lit(1)).as("c"),
-          coalesce(sum("dist"), lit(BigDecimal(0))).as("s")).first()
-        val (c, s) = (probe.getLong(0), probe.getDecimal(1))
-        converged = c == prevCount && s.compareTo(prevSum) == 0
-        prevCount = c; prevSum = s
-        dist = next
+      // state: (dist, previous round's row count, previous Σdist)
+      val (dist, _, _) = Fixpoint.run((seed, -1L, null: java.math.BigDecimal), maxIters,
+          s"weighted shortest paths did not converge in $maxIters rounds (negative cycle?)") {
+        case (dist, prevCount, prevSum) =>
+          val msgs = e
+            .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
+            .select(col("src").as("vid"), col("landmark"),
+              (col("dist") + col("weight")).cast("decimal(28,6)").as("dist"))
+          val next = dist.unionByName(msgs)
+            .groupBy("vid", "landmark").agg(min("dist").as("dist"))
+            .localCheckpoint(false) // lazy: the probe agg materializes it
+          val probe = next.agg(count(lit(1)).as("c"),
+            coalesce(sum("dist"), lit(BigDecimal(0))).as("s")).first()
+          val (c, s) = (probe.getLong(0), probe.getDecimal(1))
+          ((next, c, s), c == prevCount && s.compareTo(prevSum) == 0)
       }
-      require(converged,
-        s"weighted shortest paths did not converge in $maxIters rounds (negative cycle?)")
       dist.select(col("vid"), col("landmark"), col("dist").cast("double").as("dist"))
     } finally e.unpersist()
   }
@@ -1217,10 +1210,7 @@ object GraphAnalytics {
   def triangleCountDF(g: GraphStore, toLong: Column => Column): DataFrame = {
     val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val e0 = g.edges.select(toLong(col("src")).as("u"), toLong(col("dst")).as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
+    val canon = canonicalEdges(g.edges, toLong(col("src")), toLong(col("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val (corners, _) = triangleCorners(canon)
@@ -1315,18 +1305,12 @@ object GraphAnalytics {
 
   def kTruss(pairs: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"need k >= 3; got $k")
-    var e = checkpointScrubbed(
-      pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-        .where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-        .distinct())
-    var prevCount = -1L
-    var converged = false
-    var round = 0
-    var lastSup: DataFrame = null
-    while (!converged && round < maxRounds) {
-      round += 1
-      val (oriented, wedges) = trussWedges(e)
+    val canon = checkpointScrubbed(
+      canonicalEdges(pairs, col("a").cast("long"), col("b").cast("long")))
+    // state: (surviving edges (a, b[, support]), previous round's edge count)
+    val (truss, _) = Fixpoint.run((canon, -1L), maxRounds,
+        s"k-truss peeling did not converge in $maxRounds rounds") { case (e, prevCount) =>
+      val (oriented, wedges) = trussWedges(e.select("a", "b"))
       // the closing edge is oriented exactly t1→t2 (both endpoints above
       // the apex, t1 below t2), so one semi-probe admits each triangle once
       val tri = wedges.join(
@@ -1337,13 +1321,9 @@ object GraphAnalytics {
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
       val next = checkpointScrubbed(sup.where(col("support") >= k - 2))
       val c = next.count()
-      converged = c == prevCount
-      prevCount = c
-      lastSup = next
-      e = next.select("a", "b")
+      ((next, c), c == prevCount)
     }
-    require(converged, s"k-truss peeling did not converge in $maxRounds rounds")
-    lastSup
+    truss
   }
 
   private def triangleCorners(canon: DataFrame): (DataFrame, DataFrame) = {
@@ -1434,16 +1414,6 @@ object GraphAnalytics {
         (-col("__best.ns")).as("gain_cmp"))
   }
 
-  /** One parity-restricted weighted local-move round for [[louvain]]:
-    * vertices with vid % 2 == parity evaluate the gain comparator
-    * (weighted twin of [[louvainMoveRound]]'s, self-loop weight excluded
-    * from k_{v,c} — it joins every candidate community with v, a
-    * constant offset) and adopt the argmax; the other parity class
-    * passes through unchanged. Tie-breaks: on equal score the OWN
-    * community wins (no zero-gain churn), equal-score foreign candidates
-    * break label asc. `e` is (a, b, w) directed-symmetric with intra
-    * weight on the diagonal; `deg`/`bigM` are level constants the caller
-    * precomputed. */
   /** localCheckpoint + STATS SCRUB for iterative loops: the LogicalRDD a
     * checkpoint produces PRESERVES the origin plan's sizeInBytes
     * estimate, so a loop that checkpoints a ~J-join plan every round
@@ -1465,16 +1435,56 @@ object GraphAnalytics {
     * table — the plan executed (maxLevels × maxRounds) times per ascent,
     * with the level inputs prepared exactly as [[louvain]] prepares them. */
   private[graft] def louvainRoundPlanForDump(symEdges: DataFrame): DataFrame = {
-    val hasW = symEdges.columns.contains("w")
-    val e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
-    val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-    val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
+    val e = louvainEdges(symEdges)
+    val (deg, bigM) = louvainLevelConstants(e)
     val lab = checkpointScrubbed(deg.select(col("vid"), col("vid").as("label")))
     louvainParityRound(lab, e, deg, bigM, 0)
   }
 
+  /** The (a, b, w) long edge table [[louvain]] and [[leiden]] run on:
+    * unit weights when the symmetrized input carries no `w`. */
+  private def louvainEdges(symEdges: DataFrame): DataFrame = {
+    val hasW = symEdges.columns.contains("w")
+    checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"),
+      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
+  }
+
+  /** A level's constants: weighted degrees (vid, __kv) and the one-row
+    * total weight (__M). */
+  private def louvainLevelConstants(e: DataFrame): (DataFrame, DataFrame) = {
+    val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
+    val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
+    (deg, bigM)
+  }
+
+  /** One level's parity-alternated local-move sweep from `seed` until two
+    * consecutive zero-move rounds, or `maxRounds` rounds. Reaching the
+    * cap is NOT an error: it is load-bearing on real graphs (see
+    * [[louvain]]) and the oracle replays the capped run. */
+  private def localMoveSweep(seed: DataFrame, e: DataFrame, deg: DataFrame,
+                             bigM: DataFrame, maxRounds: Int): DataFrame = {
+    // state: (labels, parity of the next round, zero-move streak)
+    val ((out, _, _), _) = Fixpoint.iterate((seed, 0, 0), maxRounds) {
+      case (lab, parity, zeroStreak) =>
+        val next = checkpointScrubbed(louvainParityRound(lab, e, deg, bigM, parity))
+        val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
+        val streak = if (moved == 0L) zeroStreak + 1 else 0
+        ((next.select("vid", "label"), 1 - parity, streak), streak == 2)
+    }
+    out
+  }
+
+  /** One parity-restricted weighted local-move round for [[louvain]]:
+    * vertices with vid % 2 == parity evaluate the gain comparator
+    * (weighted twin of [[louvainMoveRound]]'s, self-loop weight excluded
+    * from k_{v,c} — it joins every candidate community with v, a
+    * constant offset) and adopt the argmax; the other parity class
+    * passes through unchanged. Tie-breaks: on equal score the OWN
+    * community wins (no zero-gain churn), equal-score foreign candidates
+    * break label asc. `e` is (a, b, w) directed-symmetric with intra
+    * weight on the diagonal; `deg`/`bigM` are level constants the caller
+    * precomputed. */
   private[analytics] def louvainParityRound(lab: DataFrame, e: DataFrame, deg: DataFrame,
                                  bigM: DataFrame, parity: Int): DataFrame = {
     val dC = lab.join(deg, Seq("vid"), "left")
@@ -1558,26 +1568,15 @@ object GraphAnalytics {
   def louvain(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 12): DataFrame = {
     require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
     require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
-    val hasW = symEdges.columns.contains("w")
-    var e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
+    var e = louvainEdges(symEdges)
     var mapping: DataFrame = null
     var level = 0
     var levelMoved = true
     while (level < maxLevels && levelMoved) {
-      val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
-      var lab = checkpointScrubbed(deg.select(col("vid"), col("vid").as("label")))
-      var round = 0
-      var zeroStreak = 0
-      while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpointScrubbed(louvainParityRound(lab, e, deg, bigM, round % 2))
-        val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
-        zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-        lab = next.select("vid", "label")
-        round += 1
-      }
+      val (deg, bigM) = louvainLevelConstants(e)
+      val lab = localMoveSweep(
+        checkpointScrubbed(deg.select(col("vid"), col("vid").as("label"))),
+        e, deg, bigM, maxRounds)
       levelMoved = lab.where(col("label") =!= col("vid")).limit(1).count() > 0
       mapping = checkpointScrubbed(
         if (mapping == null) lab
@@ -1639,27 +1638,15 @@ object GraphAnalytics {
   def leiden(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 8): DataFrame = {
     require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
     require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
-    val hasW = symEdges.columns.contains("w")
-    var e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
+    var e = louvainEdges(symEdges)
     var map: DataFrame = null  // (vid, cur): original vid -> current-level vertex
     var init: DataFrame = null // (vid, label): this level's starting communities
     var lab: DataFrame = null
     for (level <- 1 to maxLevels) {
-      val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
-      lab = checkpointScrubbed(
-        if (init == null) deg.select(col("vid"), col("vid").as("label")) else init)
-      var round = 0
-      var zeroStreak = 0
-      while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpointScrubbed(louvainParityRound(lab, e, deg, bigM, round % 2))
-        val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
-        zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-        lab = next.select("vid", "label")
-        round += 1
-      }
+      val (deg, bigM) = louvainLevelConstants(e)
+      lab = localMoveSweep(checkpointScrubbed(
+          if (init == null) deg.select(col("vid"), col("vid").as("label")) else init),
+        e, deg, bigM, maxRounds)
       if (level < maxLevels) {
         // refine on the MOVE-phase partition (self-loops excluded: the
         // diagonal carries coarse intra WEIGHT, not adjacency)
@@ -1741,10 +1728,7 @@ object GraphAnalytics {
     * in > 4.6e12 triangles). Returns (vid, degree, triangles,
     * coeff_micro). */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val canon = edges.select(col("a"), col("b")).where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val canon = canonicalEdges(edges, col("a"), col("b")).localCheckpoint(true)
     val (corners, deg) = triangleCorners(canon)
     deg.join(corners, Seq("vid"), "left")
       .select(col("vid"), col("__deg").as("degree"),

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.analytics.Fixpoint
 
 /** Connected components over an undirected edge list as pure DataFrame
   * operations — the RDD-free alternative to the GraphX bridge in
@@ -66,14 +67,12 @@ object ConnectedComponents {
       // never hold its own id (its smaller neighbor's label is ≤ that
       // neighbor's id < it), so the limit is the component minimum —
       // pinned by the existing random-graph fuzz spec.
-      var labels = und.groupBy(col("u"))
+      val seed = und.groupBy(col("u"))
         .agg(least(col("u"), min(col("v"))).as("label"))
         .select(col("u").as("id"), col("label"))
         .localCheckpoint(true)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
+      val labels = Fixpoint.run(seed, maxIters,
+          s"connected components did not converge in $maxIters rounds") { labels =>
         // closed-neighborhood minimum: neighbor labels in, own label kept
         // (carried as __old so the convergence check needs no extra join)
         val nbrMin = und.join(labels, und("v") === labels("id"))
@@ -97,20 +96,17 @@ object ConnectedComponents {
           .agg(coalesce(sum(when(col("label") =!= col("__old"), 1L)
             .otherwise(0L)), lit(0L)))
           .first().getLong(0)
-        converged = changed == 0L
-        labels =
-          if (converged) prop.select("id", "label")
-          else {
-            // pointer jump: every label is itself a node id with a row in
-            // prop (labels start as ids and min() only selects existing
-            // ids), so this inner join is total
-            val jump = prop.select(col("id").as("__jid"), col("label").as("__jlabel"))
-            prop.join(jump, prop("label") === jump("__jid"))
-              .select(prop("id"), col("__jlabel").as("label"))
-              .localCheckpoint(true)
-          }
+        if (changed == 0L) (prop.select("id", "label"), true)
+        else {
+          // pointer jump: every label is itself a node id with a row in
+          // prop (labels start as ids and min() only selects existing
+          // ids), so this inner join is total
+          val jump = prop.select(col("id").as("__jid"), col("label").as("__jlabel"))
+          (prop.join(jump, prop("label") === jump("__jid"))
+            .select(prop("id"), col("__jlabel").as("label"))
+            .localCheckpoint(true), false)
+        }
       }
-      require(converged, s"connected components did not converge in $maxIters rounds")
       labels.select(col("id"), col("label").as("cluster"))
     } finally e.unpersist()
   }

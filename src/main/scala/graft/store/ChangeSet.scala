@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.analytics.Fixpoint
 import graft.model.GraphStore
 
 /** Store diff/sync — the reference's declared-but-dead VCS-sync surface
@@ -44,24 +45,19 @@ object GraphChange {
     // their children) travel with the change; the lattice is shallow, so a
     // bounded iterative expansion converges in a few rounds
     val maxRounds = 16
-    var all = direct
-    var frontier = direct
-    var converged = frontier.isEmpty
-    var round = 0
-    while (round < maxRounds && !converged) {
-      val children = to.propRefs
-        .join(frontier.withColumnRenamed("hash", "parent_hash"), Seq("parent_hash"), "left_semi")
-        .select(col("child_hash").as("hash")).distinct()
-      frontier = children.join(all, Seq("hash"), "left_anti")
-      all = all.unionByName(frontier).distinct()
-      converged = frontier.isEmpty  // evaluated ONCE per round
-      round += 1
-    }
     // fail loudly rather than ship an incomplete closure (a deeper DAG would
     // leave dangling child prop_hash references on the receiving store)
-    require(converged,
-      s"depends_on closure did not converge within $maxRounds rounds — " +
-        "nested-property DAG deeper than expected")
+    val all =
+      if (direct.isEmpty) direct
+      else Fixpoint.run((direct, direct), maxRounds,
+          s"depends_on closure did not converge within $maxRounds rounds — " +
+            "nested-property DAG deeper than expected") { case (all, frontier) =>
+        val children = to.propRefs
+          .join(frontier.withColumnRenamed("hash", "parent_hash"), Seq("parent_hash"), "left_semi")
+          .select(col("child_hash").as("hash")).distinct()
+        val fresh = children.join(all, Seq("hash"), "left_anti")
+        ((all.unionByName(fresh).distinct(), fresh), fresh.isEmpty) // evaluated ONCE per round
+      }._1
     val requiredProps = to.props.join(all, Seq("hash"), "left_semi")
     val requiredRefs = to.propRefs
       .join(all.withColumnRenamed("hash", "parent_hash"), Seq("parent_hash"), "left_semi")

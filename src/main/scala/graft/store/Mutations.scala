@@ -3,6 +3,7 @@ package graft.store
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.analytics.Fixpoint
 import graft.model.{GraphStore, Hashing, PropValue}
 
 final case class NodeExistsException(id: String)
@@ -182,15 +183,16 @@ object BulkMutations {
     * kv_graph_store.rs:736-752) as an iterated anti-join sweep: drop props
     * referenced by no vertex, edge, or surviving parent property. The prop
     * DAG is shallow (schema-type lattice), so this converges in a few
-    * rounds; maxRounds bounds the worst case.
+    * rounds; a chain too deep to confirm within maxRounds fails instead of
+    * returning a store that still holds orphans. Each round's plan embeds
+    * the previous generation's plan several times, so planning cost grows
+    * steeply with depth: a 3-link orphan chain (4 rounds) already takes
+    * seconds to plan.
     */
   def gcOrphanProps(g: GraphStore, maxRounds: Int = 10): GraphStore = {
-    var props = g.props
-    var refs = g.propRefs
-    var cached: DataFrame = null
-    var changed = true
-    var round = 0
-    while (changed && round < maxRounds) {
+    val (props, refs) = Fixpoint.run((g.props, g.propRefs), maxRounds,
+        s"orphan-prop sweep did not converge in $maxRounds rounds — " +
+          "nested-property chain deeper than expected") { case (props, refs) =>
       val live = props
         .join(g.vertices.select(col("prop_hash").as("hash")), Seq("hash"), "left_semi")
         .select("hash")
@@ -200,15 +202,13 @@ object BulkMutations {
       val nextProps = props.join(live, Seq("hash"), "left_semi").cache()
       val removedCount = props.count() - nextProps.count()
       // refs whose parent died die too (cascades to children next round)
-      refs = refs.join(nextProps.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
+      val nextRefs = refs.join(nextProps.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
       // the superseded generation's cache is dead weight once nextProps is
       // materialized (the count above) — release it instead of leaking one
-      // cached DataFrame per sweep round into the session
-      if (cached != null) cached.unpersist()
-      cached = nextProps
-      props = nextProps
-      changed = removedCount > 0
-      round += 1
+      // cached DataFrame per sweep round into the session (the input's
+      // own props are the caller's)
+      if (props ne g.props) props.unpersist()
+      ((nextProps, nextRefs), removedCount == 0)
     }
     g.copy(props = props, propRefs = refs)
   }

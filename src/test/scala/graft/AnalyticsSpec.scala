@@ -1392,6 +1392,71 @@ class AnalyticsSpec extends SparkSuite {
       val wssspJobs = counter.get()
       assert(wssspJobs <= 55, s"wsssp spent $wssspJobs jobs for ~48 rounds " +
         "(probe no longer fused with the round materialization?)")
+      // louvain's local-move sweep settles the path after 2 moving rounds
+      // and 2 confirming zero-move rounds, far below the 40-round cap.
+      // Budget: 7 fixed (edge table, degrees, total weight, seed labels,
+      // moved-anything probe, mapping, collect) + 3 per round + slack
+      counter.set(0)
+      GraphAnalytics.louvain((pathEdges ++ pathEdges.map(_.swap)).toDF("a", "b"),
+        maxLevels = 1, maxRounds = 40).collect()
+      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+      val louvainJobs = counter.get()
+      assert(louvainJobs <= 23, s"louvain spent $louvainJobs jobs on a path that settles " +
+        "in 4 rounds (zero-move streak no longer ends the sweep?)")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
+
+  test("triangulated grid: k-truss and the louvain sweep keep their per-round job budget") {
+    // An 8x8 grid with one diagonal per cell: at k = 4 the boundary edges
+    // (support 1) peel first and every round exposes the next layer, 9
+    // rounds to an empty truss. The same grid symmetrized never reaches a
+    // two-zero-move streak, so louvain's local-move sweep runs to its cap.
+    import spark.implicits._
+    val h = 8
+    def vid(i: Int, j: Int) = (i * h + j).toLong
+    val grid = for {
+      i <- 0 until h; j <- 0 until h
+      (ti, tj) <- Seq((i + 1, j), (i, j + 1), (i + 1, j + 1)) if ti < h && tj < h
+    } yield (vid(i, j), vid(ti, tj))
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+      counter.set(0)
+      val out = body
+      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+      (out, counter.get())
+    }
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // Budget: 1 canonical-edge checkpoint + 3 per round (oriented
+      // checkpoint, support checkpoint, fused count probe) x 9 + collect
+      val (truss, trussJobs) = jobsOf(
+        GraphAnalytics.kTruss(grid.toDF("a", "b"), k = 4, maxRounds = 20).collect())
+      assert(truss.isEmpty, s"the triangulated grid has no 4-truss, got ${truss.length} rows")
+      assert(trussJobs <= 33, s"kTruss spent $trussJobs jobs for 9 peel rounds " +
+        "(probe no longer fused with the round materialization?)")
+      // Budget: 7 fixed (as on the path graph) + 3 per sweep round (the
+      // hinted total-weight broadcast, the round checkpoint and its
+      // moved-count probe) x the 20-round cap
+      val sym = (grid ++ grid.map(_.swap)).toDF("a", "b")
+      val (capped, cappedJobs) = jobsOf(
+        GraphAnalytics.louvain(sym, maxLevels = 1, maxRounds = 20).collect())
+      assert(capped.length == h * h)
+      assert(cappedJobs <= 71, s"louvain spent $cappedJobs jobs for a 20-round sweep")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)

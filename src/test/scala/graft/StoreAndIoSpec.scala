@@ -39,6 +39,22 @@ class StoreAndIoSpec extends SparkSuite {
     assert(left.contains(PropValue.schemaType("Thing").hash))
   }
 
+  test("GC sweep fails at its round cap instead of leaving orphans behind") {
+    // a chain of nested props c0 -> c1 -> c2 referenced by nothing: each
+    // sweep round frees one link, and a fourth round confirms the fixpoint
+    val chain = BulkMutations.createProperties(GraphStore.empty(spark),
+      Seq(("c0", "v0", "Chain"), ("c1", "v1", "Chain"), ("c2", "v2", "Chain"))
+        .toDF("hash", "value", "schema_type"),
+      Some(Seq(("c0", "c1"), ("c1", "c2")).toDF("parent_hash", "child_hash")))
+    // (props only: each round re-embeds the previous generations' plans, so
+    // the swept refs' plan is too large to execute quickly at this depth)
+    assert(BulkMutations.gcOrphanProps(chain).props.count() == 0)
+    // two rounds free c0 and c1 only: a cap that cuts the cascade short
+    // must fail, never hand back a store that still holds c2
+    val e = intercept[IllegalArgumentException](BulkMutations.gcOrphanProps(chain, maxRounds = 2))
+    assert(e.getMessage.contains("orphan-prop sweep did not converge in 2 rounds"))
+  }
+
   test("get_or_create: 0 -> create, 1 -> reuse, >1 -> error (CLI parity)") {
     val p = PropValue.typed("Thing", Some("shared"))
     var g = GraphStore.empty(spark)
